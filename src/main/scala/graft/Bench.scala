@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** p-th percentile of `xs` (nearest-rank floor); -1 when empty. */
@@ -217,29 +216,8 @@ object Bench {
       }
     }
     Runtime.getRuntime.addShutdownHook(new Thread(() => emit(partial = true)))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // STATIC conf, default 100: the 71-query catalog compiles far more
-      // codegen units than that, so the default evicts and RECOMPILES
-      // (janino, ~100ms-seconds each) mid-measurement — the progressive
-      // slowdown observed from ~q20 onward in earlier rounds' benches.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark DEFAULT (r22): the earlier `false` override (prefer target
-      // partition size over parallelism) coalesced every mid-size
-      // post-shuffle aggregate to ~1 partition at sf0.1 — q67's 25M-pair
-      // loop and q76's 3M-group pair count ran on ONE task. Restoring the
-      // default keeps post-shuffle stages at the session's parallelism
-      // (still size-coalesced above it): full catalog 69.6 s → 59.9 s,
-      // biggest single-query deltas q76 1.82→0.83, q105–q108 −0.35 each,
-      // sub-second queries +0.02-0.04 (measured, kept).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.builder(s"local[$cpus]", Some(cpus.toInt))
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     startupSec = (System.currentTimeMillis() - jvmStartMs) / 1e3
     System.err.println(f"[bench] fork->session $startupSec%.1fs")

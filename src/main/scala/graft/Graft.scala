@@ -16,12 +16,20 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // STATIC conf, default 100 — far too small for a wide query catalog
-      // in one session; evictions trigger janino recompilation mid-run.
+      // STATIC conf, default 100: the 71-query catalog compiles far more
+      // codegen units than that, so the default evicts and RECOMPILES
+      // (janino, ~100ms-seconds each) mid-measurement — the progressive
+      // slowdown observed from ~q20 onward in earlier rounds' benches.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.adaptive.enabled", "true")
-      // Spark default (r22) — see Bench.scala: the `false` override
-      // serialized mid-size post-shuffle aggregates onto one task.
+      // Spark DEFAULT (r22): the earlier `false` override (prefer target
+      // partition size over parallelism) coalesced every mid-size
+      // post-shuffle aggregate to ~1 partition at sf0.1 — q67's 25M-pair
+      // loop and q76's 3M-group pair count ran on ONE task. Restoring the
+      // default keeps post-shuffle stages at the session's parallelism
+      // (still size-coalesced above it): full catalog 69.6 s → 59.9 s,
+      // biggest single-query deltas q76 1.82→0.83, q105–q108 −0.35 each,
+      // sub-second queries +0.02-0.04 (measured, kept).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     shufflePartitions.fold(b)(n => b.config("spark.sql.shuffle.partitions", n))
   }

@@ -46,8 +46,7 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
   override def nullSafeEval(a: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
     val n = xs.numElements()
-    val m = n * (n - 1) / 2
-    val out = new Array[Any](m)
+    val out = new Array[Any](SortedPairs.pairCount(n))
     // Box once per element, not once per pair (an element appears in n-1
     // pairs); boxed values are shared references, as in the HOF spelling.
     val boxed = new Array[Any](n)
@@ -85,7 +84,7 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
          |for (int $i = 0; $i < $n; $i++) {
          |  $boxed[$i] = $a.isNullAt($i) ? null : (Object) $value;
          |}
-         |Object[] $out = new Object[$n * ($n - 1) / 2];
+         |Object[] $out = new Object[graft.functions.SortedPairs.pairCount($n)];
          |int $k = 0;
          |for (int $i = 0; $i < $n; $i++) {
          |  for (int $j = $i + 1; $j < $n; $j++) {
@@ -101,4 +100,19 @@ case class SortedPairs(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "graft_pairs"
+}
+
+object SortedPairs {
+
+  /** C(n,2), the output array's length: computed in Long, so an input past
+    * 65,536 elements fails named instead of overflowing Int into a
+    * negative or truncated allocation.
+    */
+  def pairCount(n: Int): Int = {
+    val m = n.toLong * (n - 1) / 2
+    if (m > Int.MaxValue) throw new IllegalArgumentException(
+      s"graft_pairs: an array of $n elements has $m pairs, more than the " +
+        s"${Int.MaxValue} an array can hold")
+    m.toInt
+  }
 }

@@ -36,10 +36,13 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Observation metric → Long; 0 when the metric is absent (empty input). */
+  /** Observation `count` metric → Long. `count` is Long even on empty
+    * input, so anything else is a bug and fails named (a silent 0 would
+    * take pageRank's empty-graph exit). */
   private def asLongG(v: Any): Long = v match {
     case l: java.lang.Long => l.longValue()
-    case _ => 0L
+    case other => throw new IllegalStateException(
+      s"expected a Long count observation, got ${if (other == null) "null" else other.getClass.getName}")
   }
 
   /** (id, cluster_id) for every vertex appearing in `edges` (src, dst);

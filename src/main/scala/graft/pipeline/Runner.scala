@@ -59,29 +59,6 @@ object Runner {
         Map.empty
     }
 
-  /** Bounded wait on an Observation: its metrics only ever arrive if the
-    * observed node was part of an executed plan — a `transform` that does
-    * not derive its output from its input would otherwise hang `get`
-    * forever. Polls the non-blocking `getOrEmpty` (no detached blocked
-    * thread to leak on timeout); timing out falls back to the
-    * separate-scan path.
-    */
-  // Observation.getOrEmpty is the documented non-blocking read of delivered
-  // metrics, but its Scala signature is `private[sql]` — the JVM method is
-  // public, so a one-time reflective handle bridges the access gap without
-  // a detached blocked thread.
-  private val getOrEmptyMethod = classOf[Observation].getMethod("getOrEmpty")
-
-  private def getWithin(obs: Observation, timeout: FiniteDuration): Option[Map[String, Any]] = {
-    val deadline = System.nanoTime() + timeout.toNanos
-    var m = getOrEmptyMethod.invoke(obs).asInstanceOf[Map[String, Any]]
-    while (m.isEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      m = getOrEmptyMethod.invoke(obs).asInstanceOf[Map[String, Any]]
-    }
-    if (m.isEmpty) None else Some(m)
-  }
-
   /** Run every active config entry: read via `source` (called with the
     * system-qualified name, e.g. `bank_a.orders`), optionally window to
     * rows past the last watermark, apply the table's silver `transform`
@@ -174,11 +151,11 @@ object Runner {
           // with the write action; the bounded poll only covers listener
           // delivery lag, with a recount fallback instead of an unbounded
           // block.
-          val rows = getWithin(rowObs, 10.seconds)
+          val rows = graft.Observations.getWithin(rowObs, 10.seconds)
             .map(_("rows").asInstanceOf[Long])
             .getOrElse(transform.getOrElse(e.tableName, identity[DataFrame] _)(windowed).count())
           val wm = e.watermarkColumn.flatMap { c =>
-            getWithin(wmObs, 10.seconds) match {
+            graft.Observations.getWithin(wmObs, 10.seconds) match {
               case Some(m) => Option(m("wm")).map(_.toString)
               case None    => Audit.newWatermark(windowed, c) // severed lineage
             }

@@ -2671,6 +2671,17 @@ object VersionedTable {
     * version the txn will record (a commit racing in mid-hop is consumed
     * by the NEXT hop, never half-consumed). Returns the consumed source
     * version and the target version, or None when already caught up.
+    *
+    * Duplicate key versions: a `merge_update` source commit (a merge that
+    * rewrote existing rows, e.g. an SCD2 merge expiring a current row) is
+    * consumed as its staged batch — the post-image of every updated key
+    * plus fresh inserts — and APPENDED to `target`. An updated key thus
+    * reaches `target` as a new row version next to the version an earlier
+    * hop already delivered, and the older one is never retracted
+    * (Delta's `ignoreChanges`). `transform` must resolve versions itself
+    * (filter to current rows, or key on the version column) when `target`
+    * needs one row per key; consumers that need the pre-image read
+    * [[readChangeFeed]] instead.
     */
   def feedInto(spark: SparkSession, source: String, target: String, app: String)(
       transform: DataFrame => DataFrame): Option[(Long, Long)] = {

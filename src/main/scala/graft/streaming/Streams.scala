@@ -34,25 +34,6 @@ object Streams {
   // collides with the generated aggregate helpers.
   final case class SessState(startUs: Long, endUs: Long, cnt: Long, total: Double)
 
-  /** The replay-idempotence write shared by every batch-log sink: when
-    * `df` is non-empty, dynamic-overwrite its rows into
-    * `dir/batch_id=<batchId>`; when the recomputation produces NOTHING,
-    * delete the stale partition instead — dynamic overwrite of an empty
-    * frame writes no partitions, so a replay after config/state drift
-    * would otherwise silently resurrect rows the replayed batch no longer
-    * produces. One definition, not a per-sink copy.
-    */
-  private def writeBatchPartition(spark: SparkSession, df: DataFrame,
-      dir: String, batchId: Long): Unit =
-    if (df.isEmpty) {
-      val part = new org.apache.hadoop.fs.Path(s"$dir/batch_id=$batchId")
-      val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(part)) fs.delete(part, true)
-    } else {
-      graft.sources.Sinks.dynamicOverwrite(
-        df.withColumn("batch_id", lit(batchId)), dir, Seq("batch_id"))
-    }
-
   /** Watermarked tumbling-window count/sum over an event stream. */
   def windowedAgg(events: DataFrame, watermarkDelay: String, windowLen: String): DataFrame =
     events
@@ -167,28 +148,10 @@ object Streams {
     // returned signature cache is explicitly dropped at the end.
     val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", k,
       inlineHashes = true)
-    // Replay-idempotent: both outputs are partitioned by batch_id and this
-    // batch's partition is dynamically overwritten, so a micro-batch retry
-    // after a failure REPLACES its own rows instead of appending duplicates.
-    // The index read likewise drops any rows a half-finished attempt of
-    // THIS batch already landed — otherwise a replay would join the batch
-    // against its own signatures and emit self-pairs forever after.
-    // Path-missing (first batch ever), corrupt files and schema-mismatch
-    // are DIFFERENT failures: only the first means "no index yet"
-    // (parquetIfExists); a legacy index without the batch_id column must
-    // fail loudly, not be silently treated as empty (which would drop
-    // every pre-existing signature from dedup and mix layouts on disk).
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => sig.limit(0) // no index yet
-        case Some(idx) =>
-          require(idx.columns.contains("batch_id"),
-            s"near-dup index at $indexDir lacks the batch_id partition column " +
-              "(legacy layout) — migrate it into batch_id=<n> partitions " +
-              "before streaming resumes")
-          idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
-    val all = existing.unionByName(sig).cache()
+    // Replay-idempotent through BatchLog: both outputs overwrite this
+    // batch's partition, and the index read excludes it.
+    val index = BatchLog(indexDir)
+    val all = index.prior(spark, batchId).fold(sig)(_.unionByName(sig)).cache()
     val newBands = MinHash.bands(sig, "doc_id", k, bandRows)
       .withColumnRenamed("doc_id", "id_new")
     // Bucket cap on the ACCUMULATED index side (r10, MinHash.BucketCap
@@ -206,14 +169,10 @@ object Streams {
       .select(least(col("id_new"), col("id_other")).as("id_a"),
         greatest(col("id_new"), col("id_other")).as("id_b"))
       .distinct()
-    graft.sources.Sinks.dynamicOverwrite(
-      MinHash.signatureSimilarity(cand, all, "doc_id", k)
-        .filter(col("sig_sim") >= minSigSim)
-        .withColumn("batch_id", lit(batchId)),
-      pairsDir, Seq("batch_id"))
+    BatchLog(pairsDir).write(MinHash.signatureSimilarity(cand, all, "doc_id", k)
+      .filter(col("sig_sim") >= minSigSim), batchId)
     // Emit pairs first (reads the old index), then extend the index.
-    graft.sources.Sinks.dynamicOverwrite(
-      sig.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
+    index.write(sig, batchId)
     all.unpersist(); sig.unpersist()
   }
 
@@ -242,19 +201,8 @@ object Streams {
       bandRows: Int = 2, minSigSim: Double = 0.5, minQuality: Int = 4000)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.text.{MinHash, TextFunctions => TF}
-    val keptDir = s"$stateDir/kept"
-    val fpsDir = s"$stateDir/fps"
-    val sigsDir = s"$stateDir/sigs"
-    def prior(dir: String): Option[DataFrame] =
-      graft.sources.Sources.parquetIfExists(spark, dir)
-        .map { df =>
-          // Same corrupt≠absent discipline as nearDupSink/ivfIndexSink: a
-          // legacy layout without batch_id must fail loudly, not read empty.
-          require(df.columns.contains("batch_id"),
-            s"curation state at $dir lacks the batch_id partition column " +
-              "(legacy layout) — migrate before streaming resumes")
-          df.filter(col("batch_id") =!= batchId).drop("batch_id")
-        }
+    val fps = BatchLog(s"$stateDir/fps")
+    val sigs = BatchLog(s"$stateDir/sigs")
     // 1. quality gate (TF.qualityGrid — the ONE survivorship formula shared
     // with Curate.keepSet; batch/streaming parity depends on it)
     val gated = batch
@@ -267,13 +215,13 @@ object Streams {
       .agg(min(struct(col("doc_id"), col("_th"), col("text"))).as("_m"))
       .select(col("fp"), col("_m.doc_id").as("doc_id"),
         col("_m._th").as("_th"), col("_m.text").as("text"))
-    val exactKept = prior(fpsDir).fold(perFp)(old =>
+    val exactKept = fps.prior(spark, batchId).fold(perFp)(old =>
       perFp.join(old.select(col("fp")), Seq("fp"), "left_anti")).cache()
     // 3. near-dup vs the kept-signature log and smaller-id batch survivors
     val sh = MinHash.withShingles(exactKept, "doc_id", "text")
     val sig = MinHash.signature(MinHash.shingleRows(sh, "doc_id"), "doc_id", k,
       inlineHashes = true) // no per-batch vocab cache (see nearDupSink)
-    val oldSigs = prior(sigsDir).getOrElse(sig.limit(0))
+    val oldSigs = sigs.prior(spark, batchId).getOrElse(sig.limit(0))
     val allSigs = oldSigs.unionByName(sig).cache()
     val newB = MinHash.bands(sig, "doc_id", k, bandRows)
       .withColumnRenamed("doc_id", "id_a")
@@ -292,28 +240,17 @@ object Streams {
       .filter(col("sig_sim") >= minSigSim)
       .select(col("id_a").as("doc_id")).distinct()
     val kept = exactKept.join(dropped, Seq("doc_id"), "left_anti").cache()
-    // 4. replay-idempotent state appends (each batch owns its partition).
-    // A batch keeping nothing writes nothing: an empty partitioned write
-    // would create a file-less directory that later schema inference
-    // cannot read (and replay of a deterministic empty batch re-derives
-    // empty, so skipping stays idempotent).
-    if (!kept.isEmpty) {
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.select(col("doc_id"), (col("_th") / 10000d).as("quality_score"))
-          .withColumn("batch_id", lit(batchId)), keptDir, Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.select(col("fp")).withColumn("batch_id", lit(batchId)),
-        fpsDir, Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
-        sig.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .withColumn("batch_id", lit(batchId)), sigsDir, Seq("batch_id"))
-    }
+    // 4. replay-idempotent state appends (each batch owns its partition)
+    BatchLog(s"$stateDir/kept").write(
+      kept.select(col("doc_id"), (col("_th") / 10000d).as("quality_score")), batchId)
+    fps.write(kept.select(col("fp")), batchId)
+    sigs.write(sig.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi"), batchId)
     kept.unpersist(); allSigs.unpersist(); sig.unpersist(); exactKept.unpersist()
   }
 
   /** Current kept set from the [[curateSink]] state log. */
   def readCurated(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog(s"$stateDir/kept").read(spark)
 
   /** foreachBatch incremental containment rejection — the streaming face
     * of [[graft.text.Containment]]: drop a batch document whose distinct
@@ -337,21 +274,13 @@ object Streams {
   def containmentSink(spark: SparkSession, stateDir: String,
       minContainment: Double = 0.8)(batch: DataFrame, batchId: Long): Unit = {
     import graft.text.{MinHash, TextFunctions => TF}
-    val shDir = s"$stateDir/shingles"
-    val keptDir = s"$stateDir/kept"
-    def prior(dir: String): Option[DataFrame] =
-      graft.sources.Sources.parquetIfExists(spark, dir).map { df =>
-        require(df.columns.contains("batch_id"),
-          s"containment state at $dir lacks the batch_id partition column " +
-            "(legacy layout) — migrate before streaming resumes")
-        df.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
+    val shingles = BatchLog(s"$stateDir/shingles")
     val rows = MinHash.withShingles(batch, "doc_id", "text")
       .select(col("doc_id"), explode(col("shingles")).as("_s"))
       .select(col("doc_id"), TF.hash60(col("_s")).as("h"))
       .cache()
     val sizes = rows.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val idx = prior(shDir).getOrElse(rows.limit(0))
+    val idx = shingles.prior(spark, batchId).getOrElse(rows.limit(0))
       .select(col("doc_id").as("id_b"), col("h")).withColumn("_old", lit(true))
       .unionByName(rows.select(col("doc_id").as("id_b"), col("h"))
         .withColumn("_old", lit(false)))
@@ -365,23 +294,14 @@ object Streams {
       .select(col("id_a").as("doc_id")).distinct()
     val kept = batch.select(col("doc_id"))
       .join(dropped, Seq("doc_id"), "left_anti").cache()
-    // Empty-batch discipline as in curateSink: a batch keeping nothing
-    // writes nothing (file-less partition dirs break later reads; replay
-    // re-derives empty deterministically).
-    if (!kept.isEmpty) {
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.withColumn("batch_id", lit(batchId)), keptDir, Seq("batch_id"))
-      val keptRows = rows.join(kept, Seq("doc_id"), "left_semi")
-      if (!keptRows.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          keptRows.withColumn("batch_id", lit(batchId)), shDir, Seq("batch_id"))
-    }
+    BatchLog(s"$stateDir/kept").write(kept, batchId)
+    shingles.write(rows.join(kept, Seq("doc_id"), "left_semi"), batchId)
     kept.unpersist(); rows.unpersist()
   }
 
   /** Current kept set from the [[containmentSink]] state log. */
   def readContainmentKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog(s"$stateDir/kept").read(spark)
 
   /** foreachBatch streaming SemDeDup — the streaming face of q86
     * ([[graft.sim.Ann.semDedup]]) with FIRST-SEEN-WINS survivorship:
@@ -413,18 +333,15 @@ object Streams {
   def semDedupSink(spark: SparkSession, stateDir: String, planes: Int = 8,
       tau: Double = 0.35)(batch: DataFrame, batchId: Long): Unit = {
     import graft.sim.Ann
-    val keptDir = s"$stateDir/kept"
+    val keptLog = BatchLog(s"$stateDir/kept")
     val vecs = batch.select(col("id"), col("vec"), Ann.norm(col("vec")).as("nrm")).cache()
     val withB = vecs.join(Ann.hyperplaneBuckets(vecs, planes), "id")
-    val prior = graft.sources.Sources.parquetIfExists(spark, keptDir).map { df =>
-      require(df.columns.contains("batch_id"),
-        s"semdedup state at $keptDir lacks the batch_id partition column " +
-          "(legacy layout) — migrate before streaming resumes")
+    val prior = keptLog.prior(spark, batchId).map { df =>
       require(df.columns.contains("nrm"),
-        s"semdedup state at $keptDir lacks the nrm (precomputed norm) column " +
+        s"semdedup state at ${keptLog.dir} lacks the nrm (precomputed norm) column " +
           "(pre-r11 layout) — rewrite the log once adding nrm = sqrt(dot(vec, vec)) " +
           "before streaming resumes")
-      df.filter(col("batch_id") =!= batchId).drop("batch_id")
+      df
     }
     val covers = prior.getOrElse(withB.limit(0))
       .select(col("bucket"), col("id").as("cover_id"), col("vec").as("cvec"),
@@ -438,14 +355,10 @@ object Streams {
       .filter(col("_old") || col("cover_id") < col("id"))
       .filter(Ann.cosinePre(Ann.dot(col("vec"), col("cvec")), col("nrm"), col("cn")) >= tau)
       .select(col("id")).distinct()
-    val kept = withB.join(dropped, Seq("id"), "left_anti").cache()
-    // Empty-kept discipline as containmentSink: file-less partition dirs
-    // break later reads; replay re-derives empty deterministically.
-    // Replay idempotence even when the recomputation keeps NOTHING (tau /
-    // planes drift between run and replay, state compaction) — see
-    // writeBatchPartition.
-    writeBatchPartition(spark, kept, keptDir, batchId)
-    kept.unpersist(); vecs.unpersist()
+    // Replay-idempotent even when the recomputation keeps NOTHING (tau /
+    // planes drift between run and replay): BatchLog.write.
+    keptLog.write(withB.join(dropped, Seq("id"), "left_anti"), batchId)
+    vecs.unpersist()
   }
 
   /** [[semDedupSink]] with `planes` DERIVED from the corpus the index is
@@ -465,7 +378,7 @@ object Streams {
 
   /** Current kept set from the [[semDedupSink]] state log. */
   def readSemDedupKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog(s"$stateDir/kept").read(spark)
 
   /** foreachBatch benchmark decontamination — the streaming face of
     * [[graft.text.Decontaminate]]: every batch document sharing >= 1 word
@@ -493,19 +406,15 @@ object Streams {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gram")).as("n_hits"))
       .cache()
-    val clean = batch.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_anti")
-    // Empty-batch discipline as in curateSink: a side keeping nothing
-    // writes nothing (file-less partition dirs break later reads; replay
-    // re-derives the same emptiness deterministically).
-    if (!clean.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        clean.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/clean", Seq("batch_id"))
-    if (!hits.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        hits.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/flagged", Seq("batch_id"))
+    writeVerdicts(stateDir, batch, hits, batchId)
+  }
+
+  /** The `clean`/`flagged` logs shared by both decontamination sinks. */
+  private def writeVerdicts(stateDir: String, batch: DataFrame, hits: DataFrame,
+      batchId: Long): Unit = {
+    BatchLog(s"$stateDir/clean").write(
+      batch.select(col("doc_id")).join(hits, Seq("doc_id"), "left_anti"), batchId)
+    BatchLog(s"$stateDir/flagged").write(hits, batchId)
     hits.unpersist()
   }
 
@@ -523,17 +432,13 @@ object Streams {
   def htmlExtractSink(spark: SparkSession, stateDir: String,
       idCol: String = "doc_id", htmlCol: String = "html",
       minLen: Int = 10, maxLinkPct: Int = 20)(
-      batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.text.HtmlExtract.mainText(batch, idCol, htmlCol, minLen, maxLinkPct)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/extracted", Seq("batch_id"))
-  }
+      batch: DataFrame, batchId: Long): Unit =
+    BatchLog(s"$stateDir/extracted").write(
+      graft.text.HtmlExtract.mainText(batch, idCol, htmlCol, minLen, maxLinkPct), batchId)
 
   /** Accumulated extractions from the [[htmlExtractSink]] log. */
   def readExtracted(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/extracted").drop("batch_id")
+    BatchLog(s"$stateDir/extracted").read(spark)
 
   /** One-time deployment step for [[bloomDecontaminateSink]] (s19):
     * persist the eval-gram set AND its Bloom filter into the sink's state
@@ -597,17 +502,7 @@ object Streams {
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("gram")).as("n_hits"))
       .cache()
-    val clean = batch.select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left_anti")
-    if (!clean.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        clean.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/clean", Seq("batch_id"))
-    if (!hits.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        hits.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/flagged", Seq("batch_id"))
-    hits.unpersist()
+    writeVerdicts(stateDir, batch, hits, batchId)
   }
 
   /** Distinct word `n`-gram set of an eval/benchmark corpus — the static
@@ -622,7 +517,7 @@ object Streams {
 
   /** Current clean set from the [[decontaminateSink]] log. */
   def readDecontaminated(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/clean").drop("batch_id")
+    BatchLog(s"$stateDir/clean").read(spark)
 
   /** s13: streaming dataset-mixture balancing — the streaming face of
     * q81's equalized-strata sampler, closing the sampling family
@@ -663,22 +558,12 @@ object Streams {
       batch: DataFrame, batchId: Long): Unit = {
     require(temperature == 1 || temperature == 2,
       s"temperature must be 1 (equalized) or 2 (sqrt damping), got $temperature")
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
+    val countsLog = BatchLog(s"$stateDir/counts")
     val batchCounts = batch.groupBy(col(stratumCol))
       .agg(count(lit(1)).as("n")).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/counts")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"mixture counts at $stateDir/counts lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-    val totals = prior match {
-      case None => batchCounts
-      case Some(p) =>
-        batchCounts.unionByName(p.select(col(stratumCol), col("n")))
-          .groupBy(col(stratumCol)).agg(sum(col("n")).as("n"))
-    }
+    val totals = countsLog.prior(spark, batchId).fold(batchCounts)(p =>
+      batchCounts.unionByName(p.select(col(stratumCol), col("n")))
+        .groupBy(col(stratumCol)).agg(sum(col("n")).as("n")))
     // Stratum counts are bounded driver metadata (q81's discipline — one
     // row per stratum, never per doc). A NULL stratum fails fast: it
     // would silently tighten every named stratum's threshold via nMin
@@ -691,7 +576,8 @@ object Streams {
         "mixture stratum is NULL — assign or quarantine upstream before balancing")
       r.get(0) -> r.getLong(1)
     }.toMap
-    val nMin = counts.values.min
+    // An empty batch over no prior state has no strata: nothing is kept.
+    val nMin = counts.values.foldLeft(Long.MaxValue)(math.min)
     def thr(n: Long): Long =
       if (temperature == 1) nMin * 1000000L / n
       else math.sqrt((BigInt(nMin) * BigInt(1000000000000L) / BigInt(n)).toDouble).toLong
@@ -702,19 +588,14 @@ object Streams {
       .filter(pmod(graft.ops.Cdm.hash60(col(idCol).cast("string")),
         lit(1000000L)) < threshCol)
       .select(col(idCol), col(stratumCol))
-    if (!kept.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        kept.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/kept", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      batchCounts.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/counts", Seq("batch_id"))
+    BatchLog(s"$stateDir/kept").write(kept, batchId)
+    countsLog.write(batchCounts, batchId)
     batchCounts.unpersist()
   }
 
   /** Kept rows accumulated by [[mixtureSink]]. */
   def readMixtureKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog(s"$stateDir/kept").read(spark)
 
   /** s16: streaming per-source adaptive quality cutoff — the streaming
     * face of q84, exact at any corpus scale because the state is a
@@ -744,7 +625,7 @@ object Streams {
     * Replay-idempotent: the prior-histogram read excludes the current
     * batch_id; both logs dynamically overwrite their own partition, and a
     * replay whose recomputed kept set is EMPTY deletes the batch's stale
-    * kept partition (dynamic overwrite of an empty frame writes nothing).
+    * kept partition ([[BatchLog.write]]).
     * `hist/` partials are sum-mergeable and compactable.
     */
   def qualityCutoffSink(spark: SparkSession, stateDir: String,
@@ -752,7 +633,7 @@ object Streams {
       textCol: String = "text", q: Double = 0.25)(
       batch: DataFrame, batchId: Long): Unit = {
     require(q > 0.0 && q < 1.0, s"q must be in (0,1), got $q")
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
+    val hist = BatchLog(s"$stateDir/hist")
     // NULL source fails fast (the mixture-family discipline): the
     // equality join-back below would silently drop its rows while its
     // histogram still tightened nothing — same guard as batch q84.
@@ -764,19 +645,9 @@ object Streams {
         .as("quality_grid"))
     val batchHist = scored.groupBy(col(sourceCol), col("quality_grid"))
       .agg(count(lit(1)).as("n")).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/hist")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"quality histogram at $stateDir/hist lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-    val cumulative = prior match {
-      case None => batchHist
-      case Some(p) =>
-        batchHist.unionByName(p.select(col(sourceCol), col("quality_grid"), col("n")))
-          .groupBy(col(sourceCol), col("quality_grid")).agg(sum(col("n")).as("n"))
-    }
+    val cumulative = hist.prior(spark, batchId).fold(batchHist)(p =>
+      batchHist.unionByName(p.select(col(sourceCol), col("quality_grid"), col("n")))
+        .groupBy(col(sourceCol), col("quality_grid")).agg(sum(col("n")).as("n")))
     // Smallest grid whose running count reaches rank ceil(q·total): the
     // window partition is one source's HISTOGRAM (<= 10001 rows).
     val wCum = org.apache.spark.sql.expressions.Window
@@ -792,19 +663,16 @@ object Streams {
       .join(broadcast(cutoffs), Seq(sourceCol))
       .filter(col("quality_grid") >= col("cutoff_grid"))
       .select(col(idCol), col(sourceCol), col("quality_grid"), col("cutoff_grid"))
-    // Replay idempotence even when the recomputation keeps NOTHING
-    // (cutoff drift after compaction, config change) — see
-    // writeBatchPartition.
-    writeBatchPartition(spark, kept, s"$stateDir/kept", batchId)
-    graft.sources.Sinks.dynamicOverwrite(
-      batchHist.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/hist", Seq("batch_id"))
+    // Replay-idempotent even when the recomputation keeps NOTHING (cutoff
+    // drift after compaction, config change): BatchLog.write.
+    BatchLog(s"$stateDir/kept").write(kept, batchId)
+    hist.write(batchHist, batchId)
     batchHist.unpersist()
   }
 
   /** Kept rows accumulated by [[qualityCutoffSink]]. */
   def readQualityKept(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/kept").drop("batch_id")
+    BatchLog(s"$stateDir/kept").read(spark)
 
   /** [[compactBatchLog]] for the [[mixtureSink]] stratum-count partials:
     * the refold is the partials' own merge algebra (sum per stratum), so
@@ -813,7 +681,7 @@ object Streams {
     */
   def compactMixtureCounts(spark: SparkSession, stateDir: String,
       stratumCol: String = "lang", keepLast: Int = 1): Boolean =
-    compactBatchLog(spark, s"$stateDir/counts", keepLast, df =>
+    BatchLog(s"$stateDir/counts").compact(spark, keepLast, df =>
       df.groupBy(col(stratumCol)).agg(sum(col("n")).as("n")))
 
   /** [[compactBatchLog]] for the [[qualityCutoffSink]] histogram partials:
@@ -822,7 +690,7 @@ object Streams {
     */
   def compactQualityHist(spark: SparkSession, stateDir: String,
       sourceCol: String = "source", keepLast: Int = 1): Boolean =
-    compactBatchLog(spark, s"$stateDir/hist", keepLast, df =>
+    BatchLog(s"$stateDir/hist").compact(spark, keepLast, df =>
       df.groupBy(col(sourceCol), col("quality_grid")).agg(sum(col("n")).as("n")))
 
   /** s14: streaming line-level exact dedup — the streaming face of q82
@@ -851,42 +719,28 @@ object Streams {
       idCol: String = "doc_id", textCol: String = "text",
       delimRegex: String = "\n")(batch: DataFrame, batchId: Long): Unit = {
     import graft.text.LineDedup
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
+    val seen = BatchLog(s"$stateDir/seen")
     val m = LineDedup.markLines(batch, idCol, textCol, delimRegex)
       .withColumn("_lh", md5(col("line")))
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"line-dedup seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
     // LEFT-join marker, not an anti-join: the rollup needs EVERY line of
     // the doc with its final verdict, not just the survivors.
-    val adjusted = (prior match {
+    val adjusted = (seen.prior(spark, batchId) match {
       case None => m.withColumn("_seen", lit(false))
       case Some(p) =>
         m.join(p.select(col("line_hash").as("_lh")).distinct()
             .withColumn("_hit", lit(true)), Seq("_lh"), "left")
           .withColumn("_seen", coalesce(col("_hit"), lit(false)))
     }).withColumn("kept", col("kept") && !col("_seen")).cache()
-    val docs = LineDedup.rollup(
-      adjusted.select(col(idCol), col("line_idx"), col("line"), col("kept")),
-      idCol)
-    graft.sources.Sinks.dynamicOverwrite(
-      docs.withColumn("batch_id", lit(batchId)), s"$stateDir/docs", Seq("batch_id"))
-    val newSeen = adjusted.filter(col("kept"))
-      .select(col("_lh").as("line_hash")).distinct()
-    if (!newSeen.isEmpty)
-      graft.sources.Sinks.dynamicOverwrite(
-        newSeen.withColumn("batch_id", lit(batchId)),
-        s"$stateDir/seen", Seq("batch_id"))
+    BatchLog(s"$stateDir/docs").write(LineDedup.rollup(
+      adjusted.select(col(idCol), col("line_idx"), col("line"), col("kept")), idCol), batchId)
+    seen.write(adjusted.filter(col("kept")).select(col("_lh").as("line_hash")).distinct(),
+      batchId)
     adjusted.unpersist()
   }
 
   /** Per-doc line-dedup rollups accumulated by [[lineDedupSink]]. */
   def readLineDedup(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog(s"$stateDir/docs").read(spark)
 
   /** s18: streaming duplicate-substring span detection — the streaming
     * face of q87 ([[graft.text.SpanDedup]]): per arriving batch, the token
@@ -923,15 +777,9 @@ object Streams {
       idCol: String = "doc_id", textCol: String = "text", n: Int = 8)(
       batch: DataFrame, batchId: Long): Unit = {
     import graft.text.SpanDedup
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
+    val seen = BatchLog(s"$stateDir/seen")
     val p = SpanDedup.postings(batch, idCol, textCol, n).cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"span-dedup seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = seen.prior(spark, batchId)
     val batchDup = SpanDedup.dupGrams(p, idCol)
     val dupSrc = prior match {
       case None => batchDup
@@ -939,21 +787,22 @@ object Streams {
     }
     val spans = SpanDedup.mergeSpans(
       p.join(dupSrc, Seq("h"), "left_semi"), idCol, n)
-    writeBatchPartition(spark, spans, s"$stateDir/spans", batchId)
-    val distinctH = p.select(col("h")).distinct()
-    val newSeen = prior match {
-      case None => distinctH
-      case Some(st) => distinctH.join(st.select(col("h")), Seq("h"), "left_anti")
-    }
-    // Same discipline for the gram log: a replay that introduces nothing
-    // must not leave stale "seen" grams claiming coverage they lost.
-    writeBatchPartition(spark, newSeen, s"$stateDir/seen", batchId)
+    BatchLog(s"$stateDir/spans").write(spans, batchId)
+    // A replay that introduces nothing must not leave stale "seen" grams
+    // claiming coverage they lost: BatchLog.write deletes the partition.
+    seen.write(newGrams(p, prior), batchId)
     p.unpersist()
   }
 
   /** Duplicate spans accumulated by [[spanDedupSink]]. */
   def readSpans(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/spans").drop("batch_id")
+    BatchLog(s"$stateDir/spans").read(spark)
+
+  /** Distinct gram hashes of postings `p` that no prior batch has seen. */
+  private def newGrams(p: DataFrame, prior: Option[DataFrame]): DataFrame = {
+    val distinctH = p.select(col("h")).distinct()
+    prior.fold(distinctH)(st => distinctH.join(st.select(col("h")), Seq("h"), "left_anti"))
+  }
 
   /** s21: streaming first-occurrence gram novelty — the streaming face of
     * q99 ([[graft.text.SpanDedup.novelty]]): each arriving document is
@@ -979,16 +828,10 @@ object Streams {
       batch: DataFrame, batchId: Long): Unit = {
     import graft.text.SpanDedup
     require(n >= 2, s"gram width must be >= 2, got $n") // the q99/noveltySql guard
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
+    val seen = BatchLog(s"$stateDir/seen")
     val p = SpanDedup.postings(batch, idCol, textCol, n)
       .select(col(idCol), col("h")).distinct().cache()
-    val prior = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/seen")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"novelty seen log at $stateDir/seen lacks the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
+    val prior = seen.prior(spark, batchId)
     val owners = p.groupBy(col("h")).agg(min(col(idCol)).as("_owner"))
     val withOwner = p.join(owners, Seq("h"))
     val scored = (prior match {
@@ -1004,22 +847,14 @@ object Streams {
       .select(col(idCol), col("n_grams"), col("n_novel"),
         (floor(col("n_novel") * lit(10000.0) / col("n_grams") + 0.5) / 10000.0)
           .as("novelty_frac"))
-    // writeBatchPartition for BOTH logs (the spanDedupSink discipline):
-    // a replay that scores nothing must delete its stale docs partition,
-    // not leave the failed attempt's rows readable.
-    writeBatchPartition(spark, scored, s"$stateDir/docs", batchId)
-    val distinctH = p.select(col("h")).distinct()
-    val newSeen = prior match {
-      case None => distinctH
-      case Some(st) => distinctH.join(st.select(col("h")), Seq("h"), "left_anti")
-    }
-    writeBatchPartition(spark, newSeen, s"$stateDir/seen", batchId)
+    BatchLog(s"$stateDir/docs").write(scored, batchId)
+    seen.write(newGrams(p, prior), batchId)
     p.unpersist()
   }
 
   /** Per-doc novelty rollups accumulated by [[noveltySink]]. */
   def readNovelty(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog(s"$stateDir/docs").read(spark)
 
   /** s15: streaming token-budget shard packing — the streaming face of
     * q71 ([[graft.ops.ShardPack]]): a live training-data writer assigning
@@ -1044,31 +879,31 @@ object Streams {
       idCol: String = "doc_id", weightCol: String = "n_tokens",
       budget: Long = 512, bucketSize: Long = 1L << 20)(
       batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"shard-pack totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
-    val assigned = graft.ops.ShardPack.assign(
-      batch, idCol, weightCol, budget, bucketSize, offset = priorTotal).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      assigned.withColumn("batch_id", lit(batchId)), s"$stateDir/docs", Seq("batch_id"))
-    val batchTotal = assigned.agg(sum(col(weightCol))).head.getLong(0)
-    graft.sources.Sinks.dynamicOverwrite(
-      spark.range(1).select(lit(batchTotal).as("total"),
-        lit(batchId).as("batch_id")),
-      s"$stateDir/totals", Seq("batch_id"))
+    val totals = BatchLog(s"$stateDir/totals")
+    val assigned = graft.ops.ShardPack.assign(batch, idCol, weightCol, budget, bucketSize,
+      offset = priorTotal(spark, totals, batchId)).cache()
+    BatchLog(s"$stateDir/docs").write(assigned, batchId)
+    writeTotal(spark, totals, assigned, weightCol, batchId)
     assigned.unpersist()
+  }
+
+  /** Token total of every batch before this one — the offset the packing
+    * sinks continue from (`totals/` holds one additive row per batch). */
+  private def priorTotal(spark: SparkSession, totals: BatchLog, batchId: Long): Long =
+    totals.prior(spark, batchId).fold(0L)(_.agg(sum(col("total"))).head.getLong(0))
+
+  /** Log the batch's `weightCol` total; a zero total adds nothing, so it
+    * writes no row (an empty batch leaves the log as it was). */
+  private def writeTotal(spark: SparkSession, totals: BatchLog, rows: DataFrame,
+      weightCol: String, batchId: Long): Unit = {
+    val total = rows.agg(coalesce(sum(col(weightCol)), lit(0L))).head.getLong(0)
+    totals.write(spark.range(1).select(lit(total).as("total")).filter(col("total") =!= 0),
+      batchId)
   }
 
   /** Shard assignments accumulated by [[shardPackSink]]. */
   def readShardPack(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/docs").drop("batch_id")
+    BatchLog(s"$stateDir/docs").read(spark)
 
   // --------------------------------------------------------------------
   // s31: streaming sequence packing (r16) — q113 at intake, the s15
@@ -1091,34 +926,19 @@ object Streams {
       idCol: String = "doc_id", weightCol: String = "n_tokens",
       seqLen: Long = 256, bucketSize: Long = 1L << 20)(
       batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"sequence-pack totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
+    val totals = BatchLog(s"$stateDir/totals")
+    val offset = priorTotal(spark, totals, batchId)
     batch.persist()
     try {
-      graft.sources.Sinks.dynamicOverwrite(
-        graft.ops.SequencePack.manifest(batch, idCol, weightCol, seqLen,
-            bucketSize, offset = priorTotal)
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/manifest", Seq("batch_id"))
-      val batchTotal = batch.agg(sum(col(weightCol))).head.getLong(0)
-      graft.sources.Sinks.dynamicOverwrite(
-        spark.range(1).select(lit(batchTotal).as("total"),
-          lit(batchId).as("batch_id")),
-        s"$stateDir/totals", Seq("batch_id"))
+      BatchLog(s"$stateDir/manifest").write(graft.ops.SequencePack.manifest(
+        batch, idCol, weightCol, seqLen, bucketSize, offset = offset), batchId)
+      writeTotal(spark, totals, batch, weightCol, batchId)
     } finally { batch.unpersist(); () }
   }
 
   /** The packing manifest accumulated by [[sequencePackSink]]. */
   def readSequencePack(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/manifest").drop("batch_id")
+    BatchLog(s"$stateDir/manifest").read(spark)
 
   // --------------------------------------------------------------------
   // s33: streaming revisit gate (r17) — the archive's own dedup signal
@@ -1143,26 +963,17 @@ object Streams {
     */
   def revisitLogSink(spark: SparkSession, stateDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
     val recs =
       if (batch.columns.contains("reason")) batch.filter(col("reason").isNull)
       else batch
     recs.persist()
     try {
-      // a batch with no revisits (the common case) writes no edges
-      // partition — an all-empty parquet tree would be uninferable
-      val edges = graft.sources.Warc.revisitEdges(recs)
-      if (!edges.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          edges.withColumn("batch_id", lit(batchId)),
-          s"$stateDir/edges", Seq("batch_id"))
-      val docs = recs.filter(col("warc_type") === "response")
+      // a batch with no revisits (the common case) leaves no edges
+      // partition — BatchLog.write of an empty frame
+      BatchLog(s"$stateDir/edges").write(graft.sources.Warc.revisitEdges(recs), batchId)
+      BatchLog(s"$stateDir/docs").write(recs.filter(col("warc_type") === "response")
         .select(col("url"), col("fetch_ts"), col("content_type"),
-          col("payload"), col("warc_file"), col("rec_offset"))
-      if (!docs.isEmpty)
-        graft.sources.Sinks.dynamicOverwrite(
-          docs.withColumn("batch_id", lit(batchId)),
-          s"$stateDir/docs", Seq("batch_id"))
+          col("payload"), col("warc_file"), col("rec_offset")), batchId)
     } finally { recs.unpersist(); () }
   }
 
@@ -1175,24 +986,16 @@ object Streams {
     // BOTH logs can legitimately not exist yet: a stream whose first
     // batches carry only revisit/metadata records writes edges but no
     // docs (archives interleave) — the read must return empty, not crash
-    val docs = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/docs")
-      .map(_.drop("batch_id"))
-      .getOrElse {
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("url", StringType),
-            StructField("fetch_ts", TimestampType),
-            StructField("content_type", StringType),
-            StructField("payload", BinaryType),
-            StructField("warc_file", StringType),
-            StructField("rec_offset", LongType))))
-      }
-    graft.sources.Sources.parquetIfExists(spark, s"$stateDir/edges") match {
-      case None => docs
-      case Some(e) =>
-        graft.sources.Warc.dropDeclaredDuplicates(docs, e.drop("batch_id"))
-    }
+    val docs = BatchLog(s"$stateDir/docs").readIfExists(spark).getOrElse(emptyFrame(spark,
+      "url STRING, fetch_ts TIMESTAMP, content_type STRING, payload BINARY, " +
+        "warc_file STRING, rec_offset BIGINT"))
+    BatchLog(s"$stateDir/edges").readIfExists(spark)
+      .fold(docs)(graft.sources.Warc.dropDeclaredDuplicates(docs, _))
   }
+
+  private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   // --------------------------------------------------------------------
   // s32: streaming token-shard materialization (r17) — i22's writer at
@@ -1207,7 +1010,7 @@ object Streams {
     * offset, and the batch's COMPLETE sequences write as
     * [[graft.sources.TokenShards]]-format files under
     * `stateDir/shards/batch_id=N/` (replay = directory overwrite, the
-    * dynamicOverwrite discipline); the new partial tail becomes the next
+    * BatchLog discipline); the new partial tail becomes the next
     * batch's carry. State: `totals` (per-batch additive token counts, the
     * s15/s31 offset hook), `carry` (latest-wins open-sequence tokens —
     * bounded at seqLen−1 ints, metadata-rate), `shards` (the artifact).
@@ -1222,27 +1025,19 @@ object Streams {
       seqLen: Int = 256, seqsPerShard: Int = 1024,
       bucketSize: Long = 1L << 20)(batch: DataFrame, batchId: Long): Unit = {
     import spark.implicits._
-    if (batch.isEmpty) return // empty-batch discipline: write nothing
-    val priorTotal = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/totals")
-      .map { st =>
-        require(st.columns.contains("batch_id"),
-          s"token-shard totals at $stateDir/totals lack the batch_id partition column")
-        st.filter(col("batch_id") =!= batchId)
-      }
-      .filter(!_.isEmpty)
-      .map(_.agg(sum(col("total"))).head.getLong(0))
-      .getOrElse(0L)
-    val carry: Seq[Int] = graft.sources.Sources.parquetIfExists(spark, s"$stateDir/carry")
-      .map(_.filter(col("batch_id") < batchId))
-      .filter(!_.isEmpty)
-      .map(_.orderBy(col("batch_id").desc).select(col("tokens"))
-        .as[Seq[Int]].head())
-      .getOrElse(Seq.empty)
+    // an empty batch is skipped whole: its shard directory is not a
+    // BatchLog, and an empty manifest would leave a file-less batch dir
+    if (batch.isEmpty) return
+    val totals = BatchLog(s"$stateDir/totals")
+    val carryLog = BatchLog(s"$stateDir/carry")
+    val total0 = priorTotal(spark, totals, batchId)
+    val carry: Seq[Int] = carryLog.latestBefore(spark, batchId)
+      .fold(Seq.empty[Int])(_.select(col("tokens")).as[Seq[Int]].head())
     // the open sequence began at the last seqLen boundary; carry holds
     // exactly the tokens past it
-    val offset0 = priorTotal - carry.length
+    val offset0 = total0 - carry.length
     require(offset0 % seqLen == 0 && offset0 >= 0,
-      s"carry/totals state disagree: total $priorTotal, carry ${carry.length}, seqLen $seqLen")
+      s"carry/totals state disagree: total $total0, carry ${carry.length}, seqLen $seqLen")
     val docs = batch.select(col(idCol).cast("long").as("doc_id"),
       col(tokCol).as("tokens"))
     val withCarry =
@@ -1280,17 +1075,10 @@ object Streams {
           case many => sys.error(
             s"${many.size} partial sequences in one batch — manifest invariant broken")
         }
-        graft.sources.Sinks.dynamicOverwrite(
-          Seq((newCarry, batchId)).toDF("tokens", "batch_id"),
-          s"$stateDir/carry", Seq("batch_id"))
+        carryLog.write(Seq(newCarry).toDF("tokens"), batchId)
         // from the persisted frame, batch rows only — not a second
         // evaluation of the micro-batch source
-        val batchTotal = dt.filter(col("doc_id") >= 0)
-          .agg(coalesce(sum(col("n_tokens")), lit(0L))).head.getLong(0)
-        graft.sources.Sinks.dynamicOverwrite(
-          spark.range(1).select(lit(batchTotal).as("total"),
-            lit(batchId).as("batch_id")),
-          s"$stateDir/totals", Seq("batch_id"))
+        writeTotal(spark, totals, dt.filter(col("doc_id") >= 0), "n_tokens", batchId)
       } finally { seqs.unpersist(); () }
     } finally { dt.unpersist(); () }
   }
@@ -1361,13 +1149,10 @@ object Streams {
         .as(Encoders.product[graft.multimodal.Binary.MediaPayload]))
       .persist()
     try {
-      // writeBatchPartition, not raw dynamic overwrite: a replay under
-      // TIGHTENED thresholds can legitimately recompute an empty log for
-      // the batch, and the stale partition must die with it
-      writeBatchPartition(spark,
-        stats.filter(col("reason").isNotNull)
-          .select(col("doc_id"), col("reason")),
-        s"$stateDir/quarantine", batchId)
+      // a replay under TIGHTENED thresholds can legitimately recompute an
+      // empty log for the batch; BatchLog.write deletes the stale partition
+      BatchLog(s"$stateDir/quarantine").write(
+        stats.filter(col("reason").isNotNull).select(col("doc_id"), col("reason")), batchId)
       val ok = stats.filter(col("reason").isNull)
         .withColumn("big_enough", col("width") * col("height") >= minPixels)
         .withColumn("aspect_ok",
@@ -1379,18 +1164,16 @@ object Streams {
           col("width").cast("long") * col("height") * 3 * minMeanByte)
         .withColumn("keep",
           col("big_enough") && col("aspect_ok") && col("filled_enough"))
-      writeBatchPartition(spark,
-        ok.filter(col("keep"))
-          .select(col("doc_id"), col("width"), col("height"), col("sum_bytes")),
-        s"$stateDir/kept", batchId)
-      writeBatchPartition(spark,
+      BatchLog(s"$stateDir/kept").write(ok.filter(col("keep"))
+        .select(col("doc_id"), col("width"), col("height"), col("sum_bytes")), batchId)
+      BatchLog(s"$stateDir/dropped").write(
         ok.filter(!col("keep"))
           .select(col("doc_id"), col("width"), col("height"), col("sum_bytes"),
             concat_ws(",",
               when(!col("big_enough"), lit("too_small")),
               when(!col("aspect_ok"), lit("bad_aspect")),
               when(!col("filled_enough"), lit("under_filled"))).as("reasons")),
-        s"$stateDir/dropped", batchId)
+        batchId)
     } finally { stats.unpersist(); () }
   }
 
@@ -1398,23 +1181,9 @@ object Streams {
     * every batch dropped or quarantined all members never creates (or
     * deletes) the `kept` directory, so absence means EMPTY, not error.
     */
-  def readImageGate(spark: SparkSession, stateDir: String): DataFrame = {
-    val kept = new org.apache.hadoop.fs.Path(s"$stateDir/kept")
-    val fs = kept.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(kept))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("width",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("height",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("sum_bytes",
-            org.apache.spark.sql.types.LongType))))
-    else spark.read.parquet(s"$stateDir/kept").drop("batch_id")
-  }
+  def readImageGate(spark: SparkSession, stateDir: String): DataFrame =
+    BatchLog(s"$stateDir/kept").readIfExists(spark).getOrElse(
+      emptyFrame(spark, "doc_id BIGINT, width INT, height INT, sum_bytes BIGINT"))
 
   /** foreachBatch streaming IVF index maintenance — the streaming face of
     * the [[graft.sim.Ann]] trained quantizer: each micro-batch of
@@ -1446,17 +1215,11 @@ object Streams {
     import spark.implicits._
     import graft.sim.Ann
     val vecs = batch.select(col("id"), col("vec"))
-    val prior =
-      graft.sources.Sources.parquetIfExists(spark, statsDir)
-        .map { st =>
-          require(st.columns.contains("batch_id"),
-            s"IVF stats at $statsDir lack the batch_id partition column")
-          st.filter(col("batch_id") =!= batchId)
-        }
-        .filter(!_.isEmpty) // replay of the bootstrap batch re-bootstraps
+    val stats = BatchLog(statsDir)
     // Per-(label, pos) prior sums feed assignment AND the drift signal —
-    // k·d rows, cached for the three consumers below.
-    val priorSums = prior.map(_.groupBy(col("label"), col("pos"))
+    // k·d rows, cached for the three consumers below. No prior (replay of
+    // the bootstrap batch included) re-bootstraps.
+    val priorSums = stats.prior(spark, batchId).map(_.groupBy(col("label"), col("pos"))
       .agg(sum(col("s")).as("ps"), sum(col("n")).as("pn")).cache())
     val assigned = priorSums match {
       case None => Ann.kmeansCells(vecs, k, trainIters)
@@ -1467,14 +1230,13 @@ object Streams {
             x => x.getField("c")).as("cvec"))
         Ann.assignCells(vecs, cent)
     }
-    val staged = assigned.withColumn("batch_id", lit(batchId)).cache()
-    graft.sources.Sinks.dynamicOverwrite(staged, indexDir, Seq("batch_id"))
+    val staged = assigned.cache()
+    BatchLog(indexDir).write(staged, batchId)
     val batchStats = staged
       .select(col("label"), posexplode(col("vec")).as(Seq("pos", "v")))
       .groupBy(col("label"), col("pos"))
       .agg(sum(col("v")).as("s"), count(lit(1)).as("n")).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      batchStats.withColumn("batch_id", lit(batchId)), statsDir, Seq("batch_id"))
+    stats.write(batchStats, batchId)
     // Drift/retrain signal (metadata-rate, written to `<statsDir>_drift`):
     // mean L2 displacement of the stats-derived centroids caused by folding
     // THIS batch in. A stationary stream keeps it near zero; a drifting one
@@ -1497,9 +1259,7 @@ object Streams {
           .agg(avg(sqrt(col("d2"))))
           .head().getDouble(0)
     }
-    graft.sources.Sinks.dynamicOverwrite(
-      Seq((batchId, disp)).toDF("batch_id", "mean_displacement"),
-      s"${statsDir}_drift", Seq("batch_id"))
+    BatchLog(s"${statsDir}_drift").write(Seq(disp).toDF("mean_displacement"), batchId)
     priorSums.foreach(_.unpersist()); batchStats.unpersist(); staged.unpersist()
   }
 
@@ -1521,7 +1281,7 @@ object Streams {
   def ivfRetrain(spark: SparkSession, indexDir: String, statsDir: String,
       k: Int = 4, trainIters: Int = 2): Unit = {
     import graft.sim.Ann
-    val corpus = spark.read.parquet(indexDir).select(col("id"), col("vec"))
+    val corpus = BatchLog(indexDir).read(spark).select(col("id"), col("vec"))
     // Materialized BEFORE the swap: the lazy plan reads the very files the
     // overwrite replaces.
     val retrained = Ann.kmeansCells(corpus, k, trainIters)
@@ -1553,12 +1313,8 @@ object Streams {
       valueCol: String)(batch: DataFrame, batchId: Long): Unit = {
     val reserved = Seq("_n", "_s", "batch_id").intersect(groupCols)
     require(reserved.isEmpty, s"reserved group columns: ${reserved.mkString(", ")}")
-    graft.sources.Sinks.dynamicOverwrite(
-      batch.groupBy(groupCols.map(col): _*)
-        .agg(count(lit(1)).as("_n"),
-          sum(col(valueCol).cast("decimal(28,6)")).as("_s"))
-        .withColumn("batch_id", lit(batchId)),
-      statsDir, Seq("batch_id"))
+    BatchLog(statsDir).write(batch.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("_n"), sum(col(valueCol).cast("decimal(28,6)")).as("_s")), batchId)
   }
 
   /** Current aggregate from the partial-state log written by
@@ -1566,59 +1322,20 @@ object Streams {
     */
   def readGoldAgg(spark: SparkSession, statsDir: String,
       groupCols: Seq[String]): DataFrame =
-    spark.read.parquet(statsDir)
+    BatchLog(statsDir).read(spark)
       .groupBy(groupCols.map(col): _*)
       .agg(sum(col("_n")).as("n_rows"), sum(col("_s")).as("sum_value"))
 
-  /** Reserved batch_id for compacted/base partitions — real micro-batch
-    * ids are Spark-assigned and non-negative, so the base never collides
-    * with (or is overwritten by) a replayed batch.
-    */
-  val BaseBatchId: Long = -1L
+  /** Reserved batch_id for compacted/base partitions ([[BatchLog.BaseBatchId]]). */
+  val BaseBatchId: Long = BatchLog.BaseBatchId
 
-  /** Compact a batch_id-partitioned log (the [[nearDupSink]] signature
-    * index, [[goldAggSink]] partials): fold every partition EXCEPT the
-    * newest `keepLast` real batches into the single base partition
-    * ([[BaseBatchId]]), leaving read cost bounded by keepLast + 1
-    * partitions instead of growing with total batch count — the one
-    * unbounded term in the log-structured streaming story.
-    *
-    * `merge` re-aggregates the folded rows (identity for row logs like
-    * signature indexes; a groupBy re-sum for partial-aggregate logs — see
-    * [[compactGoldAgg]]).
-    *
-    * Replay safety: Structured Streaming only ever replays the LAST
-    * uncommitted micro-batch, and `keepLast >= 1` keeps at least that
-    * partition un-folded — a replay then dynamic-overwrites its own
-    * partition exactly as before compaction. The rewrite itself is one
-    * atomic whole-directory swap ([[graft.sources.Sinks.overwriteAtomic]]):
-    * the folded base + kept partitions are fully written to a temp dir
-    * (reading the live one) before the rename — a crash mid-compaction
-    * leaves the uncompacted log intact.
-    *
-    * Returns true when a fold happened, false when there was nothing to
-    * compact.
+  /** [[BatchLog.compact]] on the batch log at `dir` (a [[nearDupSink]]
+    * signature index, [[goldAggSink]] partials, any sink's log): `merge`
+    * re-aggregates the folded rows, identity for row logs.
     */
   def compactBatchLog(spark: SparkSession, dir: String, keepLast: Int,
-      merge: DataFrame => DataFrame = identity): Boolean = {
-    require(keepLast >= 1,
-      s"keepLast must cover the micro-batch replay window (>= 1), got $keepLast")
-    // Partition-value inference may type batch_id int; normalize to long.
-    val df = spark.read.parquet(dir)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-    val ids = df.select(col("batch_id")).distinct().collect().map(_.getLong(0))
-    val foldable = ids.filter(_ != BaseBatchId).sorted.dropRight(keepLast)
-    if (foldable.isEmpty) return false
-    val keepIds = ids.filter(i => i != BaseBatchId && !foldable.contains(i))
-    val folded = merge(
-      df.filter(col("batch_id") === BaseBatchId ||
-        col("batch_id").isin(foldable.toSeq: _*)).drop("batch_id"))
-      .withColumn("batch_id", lit(BaseBatchId))
-    val kept = df.filter(col("batch_id").isin(keepIds.toSeq: _*))
-    graft.sources.Sinks.overwriteAtomic(
-      folded.unionByName(kept), dir, Seq("batch_id"))
-    true
-  }
+      merge: DataFrame => DataFrame = identity): Boolean =
+    BatchLog(dir).compact(spark, keepLast, merge)
 
   /** [[compactBatchLog]] for the [[goldAggSink]] partial-aggregate log:
     * folding re-applies the merge algebra (sum of counts, sum of exact
@@ -1627,7 +1344,7 @@ object Streams {
     */
   def compactGoldAgg(spark: SparkSession, statsDir: String,
       groupCols: Seq[String], keepLast: Int): Boolean =
-    compactBatchLog(spark, statsDir, keepLast, df =>
+    BatchLog(statsDir).compact(spark, keepLast, df =>
       df.groupBy(groupCols.map(col): _*)
         .agg(sum(col("_n")).as("_n"),
           sum(col("_s")).cast("decimal(28,6)").as("_s")))
@@ -1654,21 +1371,17 @@ object Streams {
   def linkGraphSink(spark: SparkSession, edgesDir: String,
       idCol: String = "doc_id", htmlCol: String = "html",
       baseCol: String = "base_url")(batch: DataFrame, batchId: Long): Unit = {
-    val lk = graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
-    graft.sources.Sinks.dynamicOverwrite(
-      lk.filter(col("target_host") =!= col("src_host"))
-        .groupBy(col("src_host"), col("target_host"))
-        .agg(count(lit(1)).as("_n_links"),
-          countDistinct(col(idCol)).as("_n_docs"))
-        .withColumn("batch_id", lit(batchId)),
-      edgesDir, Seq("batch_id"))
+    BatchLog(edgesDir).write(graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
+      .filter(col("target_host") =!= col("src_host"))
+      .groupBy(col("src_host"), col("target_host"))
+      .agg(count(lit(1)).as("_n_links"), countDistinct(col(idCol)).as("_n_docs")), batchId)
   }
 
   /** Current host-pair edge rollup from the [[linkGraphSink]] partial log
     * — the q105 output shape (src_host, target_host, n_links, n_docs).
     */
   def readLinkGraph(spark: SparkSession, edgesDir: String): DataFrame =
-    spark.read.parquet(edgesDir)
+    BatchLog(edgesDir).read(spark)
       .groupBy(col("src_host"), col("target_host"))
       .agg(sum(col("_n_links")).as("n_links"), sum(col("_n_docs")).as("n_docs"))
 
@@ -1677,7 +1390,7 @@ object Streams {
     */
   def compactLinkGraph(spark: SparkSession, edgesDir: String,
       keepLast: Int): Boolean =
-    compactBatchLog(spark, edgesDir, keepLast, df =>
+    BatchLog(edgesDir).compact(spark, keepLast, df =>
       df.groupBy(col("src_host"), col("target_host"))
         .agg(sum(col("_n_links")).as("_n_links"),
           sum(col("_n_docs")).as("_n_docs")))
@@ -1705,17 +1418,12 @@ object Streams {
     // aren't fetched and decoded twice per batch
     batch.persist()
     try {
-      val lk = graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
-      graft.sources.Sinks.dynamicOverwrite(
-        lk.groupBy(col("target_url"), col("target_host"))
-          .agg(countDistinct(col(idCol)).as("_n"))
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/cites", Seq("batch_id"))
-      graft.sources.Sinks.dynamicOverwrite(
-        batch.select(graft.text.TextFunctions.hash60(
-            graft.text.Urls.canonicalize(col(baseCol))).as("url_h")).distinct()
-          .withColumn("batch_id", lit(batchId)),
-        s"$stateDir/crawled", Seq("batch_id"))
+      BatchLog(s"$stateDir/cites").write(
+        graft.text.HtmlExtract.links(batch, idCol, htmlCol, baseCol)
+          .groupBy(col("target_url"), col("target_host"))
+          .agg(countDistinct(col(idCol)).as("_n")), batchId)
+      BatchLog(s"$stateDir/crawled").write(batch.select(graft.text.TextFunctions.hash60(
+        graft.text.Urls.canonicalize(col(baseCol))).as("url_h")).distinct(), batchId)
     } finally { batch.unpersist(); () }
   }
 
@@ -1742,9 +1450,7 @@ object Streams {
       .select(col("target_url"),
         graft.text.Urls.domain(col("target_url")).as("target_host"))
       .distinct()
-    graft.sources.Sinks.dynamicOverwrite(
-      locs.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/sitemap", Seq("batch_id"))
+    BatchLog(s"$stateDir/sitemap").write(locs, batchId)
   }
 
   /** Current frontier from the [[frontierSink]] (+ optional
@@ -1765,11 +1471,10 @@ object Streams {
   def readFrontier(spark: SparkSession, stateDir: String, k: Int,
       crawlDelays: Option[DataFrame] = None,
       windowSec: Long = 60): DataFrame = {
-    val cites = spark.read.parquet(s"$stateDir/cites")
+    val cites = BatchLog(s"$stateDir/cites").read(spark)
       .groupBy(col("target_url"), col("target_host"))
       .agg(sum(col("_n")).as("n_citations"))
-    val cand0 = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/sitemap") match {
+    val cand0 = BatchLog(s"$stateDir/sitemap").readIfExists(spark) match {
       case None => cites.withColumn("source", lit("anchor"))
       case Some(sm) =>
         val declared = sm.select(col("target_url"), col("target_host"))
@@ -1782,7 +1487,7 @@ object Streams {
               .when(col("_sm").isNotNull, "sitemap")
               .otherwise("anchor").as("source"))
     }
-    val crawled = spark.read.parquet(s"$stateDir/crawled")
+    val crawled = BatchLog(s"$stateDir/crawled").read(spark)
       .select(col("url_h")).distinct()
     val cand = cand0.join(crawled,
       graft.text.TextFunctions.hash60(col("target_url")) === col("url_h"),
@@ -1812,19 +1517,18 @@ object Streams {
     */
   def pcaScatterSink(spark: SparkSession, statsDir: String,
       vecCol: String = "embedding")(batch: DataFrame, batchId: Long): Unit = {
-    // an empty (or all-null-vector) batch carries no scatter: write
-    // nothing — replay of an empty batch is also nothing, still exact.
-    // Checking the FILTERED frame, not the raw batch: scatterOf would
-    // otherwise fail its named require on an all-null batch.
-    if (batch.filter(col(vecCol).isNotNull).isEmpty) return
-    val agg = graft.sim.Pca.scatterOf(batch, vecCol)
-    val d = graft.sim.Pca.dimOf(agg.length)
     import spark.implicits._
-    val row = Seq((agg(0), agg.slice(1, 1 + d).toSeq,
-      agg.slice(1 + d, agg.length).toSeq))
-      .toDF("n", "sums", "scatter")
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(row, statsDir, Seq("batch_id"))
+    // an empty (or all-null-vector) batch carries no scatter: its partial
+    // log stays empty. Checking the FILTERED frame, not the raw batch:
+    // scatterOf would otherwise fail its named require on an all-null batch.
+    val rows: Seq[(Double, Seq[Double], Seq[Double])] =
+      if (batch.filter(col(vecCol).isNotNull).isEmpty) Nil
+      else {
+        val agg = graft.sim.Pca.scatterOf(batch, vecCol)
+        val d = graft.sim.Pca.dimOf(agg.length)
+        Seq((agg(0), agg.slice(1, 1 + d).toSeq, agg.slice(1 + d, agg.length).toSeq))
+      }
+    BatchLog(statsDir).write(rows.toDF("n", "sums", "scatter"), batchId)
   }
 
   /** Fold the [[pcaScatterSink]] partial log into a PCA model: exact
@@ -1833,7 +1537,7 @@ object Streams {
     */
   def readPcaModel(spark: SparkSession, statsDir: String,
       k: Int): graft.sim.Pca.Model = {
-    val rows = spark.read.parquet(statsDir)
+    val rows = BatchLog(statsDir).read(spark)
       .select(col("n"), col("sums"), col("scatter")).collect()
     require(rows.nonEmpty, s"no PCA partials at $statsDir")
     val d = rows.head.getSeq[Double](1).length
@@ -1967,44 +1671,54 @@ object Streams {
   def tokenizerDriftSink(spark: SparkSession, stateDir: String,
       textCol: String = "text", numMerges: Int = 64, maxWords: Int = 1 << 16)(
       batch: DataFrame, batchId: Long): Unit = {
+    import graft.text.Bpe
+    driftBatch[Seq[String]](spark, stateDir, textCol, maxWords, batch, batchId)(
+      wc => Bpe.mergeStrings(Bpe.trainBytesOnCounts(wc, numMerges, minCount = 1)),
+      writeMerges(spark, stateDir, _), readMerges(spark, stateDir), Nil) { (words, merges) =>
+      words
+        .select(col("c"),
+          size(Bpe.encodeBytes(col("w"), merges)).as("t"),
+          (octet_length(col("w")) + 1).as("base"))
+        .agg(
+          sum(col("c")).as("n_word_occurrences"),
+          count(lit(1)).as("n_distinct_words"),
+          (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
+          (sum(when(col("t") === col("base"), col("c")).otherwise(0L)).cast("double") /
+            sum(col("c"))).as("oov_rate"))
+    }
+  }
+
+  /** The batch step both tokenizer-drift sinks share: log the batch's word
+    * counts; take the model `deployed` when another batch already logged
+    * words, else bootstrap it — `train` on this batch's top-`maxWords`
+    * counts, then `deploy` (a bootstrap replay re-trains the identical,
+    * deterministic table); log `measure(words, model)` as the batch's drift
+    * row. A batch without words (empty, or all-empty texts) bootstraps no
+    * empty table and logs no drift row of null ratios: it measures under
+    * `none` and the zero-word row is dropped.
+    */
+  private def driftBatch[M](spark: SparkSession, stateDir: String, textCol: String,
+      maxWords: Int, batch: DataFrame, batchId: Long)(train: Seq[(String, Long)] => M,
+      deploy: M => Unit, deployed: => M, none: M)(
+      measure: (DataFrame, M) => DataFrame): Unit = {
     import spark.implicits._
-    import graft.text.{Bpe, TextFunctions}
-    // the curateSink/mixtureSink empty-batch discipline: an empty (or
-    // first empty) micro-batch must neither bootstrap an empty merge table
-    // nor log a drift row with null fertility/oov (sum over zero rows)
-    if (batch.isEmpty) return
     val words = batch
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
+      .select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
       .cache()
-    // a non-empty batch of all-empty texts is the same degenerate case
-    if (words.isEmpty) { words.unpersist(); return }
-    graft.sources.Sinks.dynamicOverwrite(
-      words.withColumn("batch_id", lit(batchId)), s"$stateDir/words", Seq("batch_id"))
-    val hasPrior = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/words")
-      .exists(!_.filter(col("batch_id") =!= batchId).isEmpty)
-    val merges: Seq[String] =
-      if (!hasPrior) {
-        // bootstrap (or bootstrap replay): deterministic train on THIS batch
-        val wc = words.orderBy(col("c").desc, col("w")).limit(maxWords)
-          .as[(String, Long)].collect().toSeq
-        val ms = Bpe.mergeStrings(Bpe.trainBytesOnCounts(wc, numMerges, minCount = 1))
-        writeMerges(spark, stateDir, ms)
-        ms
-      } else readMerges(spark, stateDir)
-    val drift = words
-      .select(col("c"),
-        size(Bpe.encodeBytes(col("w"), merges)).as("t"),
-        (octet_length(col("w")) + 1).as("base"))
-      .agg(
-        sum(col("c")).as("n_word_occurrences"),
-        count(lit(1)).as("n_distinct_words"),
-        (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
-        (sum(when(col("t") === col("base"), col("c")).otherwise(0L)).cast("double") /
-          sum(col("c"))).as("oov_rate"))
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(drift, s"$stateDir/drift", Seq("batch_id"))
+    val wordsLog = BatchLog(s"$stateDir/words")
+    val n = wordsLog.write(words, batchId)
+    val model =
+      if (wordsLog.batchIds(spark).exists(_ != batchId)) deployed
+      else if (n == 0) none
+      else {
+        val m = train(words.orderBy(col("c").desc, col("w")).limit(maxWords)
+          .as[(String, Long)].collect().toSeq)
+        deploy(m)
+        m
+      }
+    BatchLog(s"$stateDir/drift").write(
+      measure(words, model).filter(col("n_distinct_words") > 0), batchId)
     words.unpersist()
   }
 
@@ -2054,16 +1768,13 @@ object Streams {
     if (graft.sources.Sources.parquetIfExists(spark, s"$stateDir/weights").isEmpty)
       throw new IllegalArgumentException(
         s"no deployed weights at $stateDir/weights — run prepareClassifier first")
-    val w = readClassifierWeights(spark, stateDir)
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.text.QualityClassifier.score(batch, idCol, textCol, w)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/scored", Seq("batch_id"))
+    BatchLog(s"$stateDir/scored").write(graft.text.QualityClassifier.score(
+      batch, idCol, textCol, readClassifierWeights(spark, stateDir)), batchId)
   }
 
   /** Accumulated scores from the [[classifierScoreSink]] log. */
   def readClassifierScores(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/scored").drop("batch_id")
+    BatchLog(s"$stateDir/scored").read(spark)
 
   // --------------------------------------------------------------------
   // s24: streaming perceptual image dedup (r15) — q101's live-intake face.
@@ -2093,57 +1804,52 @@ object Streams {
       payloadCol: String = "payload")(
       batch: DataFrame, batchId: Long): Unit = {
     import spark.implicits._
-    import graft.multimodal.ImageHash
-    import graft.text.{MinHash, SimHash}
-    val indexDir = s"$stateDir/index"
-    val decoded = ImageHash.dhashesWithErrors(
+    hashDedupBatch(spark, stateDir, graft.multimodal.ImageHash.dhashesWithErrors(
       batch.select(col(idCol).cast("long").as("doc_id"),
           col(payloadCol).as("payload"), lit("image/png").as("media_type"))
-        .as[graft.multimodal.Binary.MediaPayload]).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      decoded.filter(col("decode_error").isNotNull)
-        .select(col("doc_id"), col("decode_error"))
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/quarantine", Seq("batch_id"))
+        .as[graft.multimodal.Binary.MediaPayload]), "dhash", col("dhash"), maxHamming, batchId)
+  }
+
+  /** The batch step both perceptual dedup sinks share. `decoded` holds
+    * (doc_id, decode_error, ...): decode failures go to `quarantine`; the
+    * fresh 60-bit hashes (`hash`, logged as `hashCol`) band-join against
+    * the CAPPED index of prior batches plus this one, Hamming-verified
+    * pairs go to `pairs`, then the batch extends `index`.
+    */
+  private def hashDedupBatch(spark: SparkSession, stateDir: String, decoded: DataFrame,
+      hashCol: String, hash: org.apache.spark.sql.Column, maxHamming: Int,
+      batchId: Long): Unit = {
+    import graft.text.{MinHash, SimHash}
+    decoded.cache()
+    val index = BatchLog(s"$stateDir/index")
+    BatchLog(s"$stateDir/quarantine").write(decoded.filter(col("decode_error").isNotNull)
+      .select(col("doc_id"), col("decode_error")), batchId)
     val fresh = decoded.filter(col("decode_error").isNull)
-      .select(col("doc_id"), col("dhash"))
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => fresh.limit(0)
-        case Some(idx) =>
-          require(idx.columns.contains("batch_id"),
-            s"image-dedup index at $indexDir lacks the batch_id partition " +
-              "column (legacy layout) — migrate before streaming resumes")
-          idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
-    val all = existing.unionByName(fresh).cache()
-    val newBands = ImageHash.bandRows(fresh)
-      .select(col("band"), col("band_val"), col("doc_id").as("id_new"))
-    val allBands = MinHash.capBuckets(ImageHash.bandRows(all),
-        SimHash.BandBucketCap)
-      .select(col("band"), col("band_val"), col("doc_id").as("id_other"))
-    val cand = newBands.join(allBands, Seq("band", "band_val"))
+      .select(col("doc_id"), hash.as(hashCol))
+    val all = index.prior(spark, batchId).fold(fresh)(_.unionByName(fresh)).cache()
+    def bands(df: DataFrame, id: String) = SimHash.bandRowsOf(df, "doc_id", hashCol)
+      .select(col("band"), col("band_val"), col("doc_id").as(id))
+    val cand = bands(fresh, "id_new")
+      .join(MinHash.capBuckets(bands(all, "id_other"), SimHash.BandBucketCap),
+        Seq("band", "band_val"))
       .filter(col("id_new") =!= col("id_other"))
       .select(least(col("id_new"), col("id_other")).as("id_a"),
         greatest(col("id_new"), col("id_other")).as("id_b"))
       .distinct()
     val verified = cand
-      .join(all.select(col("doc_id").as("id_a"), col("dhash").as("h_a")), "id_a")
-      .join(all.select(col("doc_id").as("id_b"), col("dhash").as("h_b")), "id_b")
+      .join(all.select(col("doc_id").as("id_a"), col(hashCol).as("h_a")), "id_a")
+      .join(all.select(col("doc_id").as("id_b"), col(hashCol).as("h_b")), "id_b")
       .withColumn("hamming", expr("bit_count(h_a ^ h_b)"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    graft.sources.Sinks.dynamicOverwrite(
-      verified.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/pairs", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      fresh.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
+    BatchLog(s"$stateDir/pairs").write(verified, batchId)
+    index.write(fresh, batchId)
     all.unpersist(); decoded.unpersist()
   }
 
   /** Accumulated near-dup image pairs from the [[imageDedupSink]] log. */
   def readImagePairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs").drop("batch_id")
+    BatchLog(s"$stateDir/pairs").read(spark)
 
   // --------------------------------------------------------------------
   // s30: streaming perceptual audio dedup (r16) — q111's live-intake
@@ -2169,54 +1875,15 @@ object Streams {
       payloadCol: String = "payload")(
       batch: DataFrame, batchId: Long): Unit = {
     import spark.implicits._
-    import graft.multimodal.Audio
-    import graft.text.{MinHash, SimHash}
-    val indexDir = s"$stateDir/index"
-    val decoded = Audio.clipRowsWithErrors(
+    hashDedupBatch(spark, stateDir, graft.multimodal.Audio.clipRowsWithErrors(
       batch.select(col(idCol).cast("long").as("doc_id"),
           col(payloadCol).as("payload"), lit("audio/wav").as("media_type"))
-        .as[graft.multimodal.Binary.MediaPayload]).cache()
-    graft.sources.Sinks.dynamicOverwrite(
-      decoded.filter(col("decode_error").isNotNull)
-        .select(col("doc_id"), col("decode_error"))
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/quarantine", Seq("batch_id"))
-    val fresh = decoded.filter(col("decode_error").isNull)
-      .select(col("doc_id"), col("clip.fp").as("fp"))
-    val existing =
-      graft.sources.Sources.parquetIfExists(spark, indexDir) match {
-        case None => fresh.limit(0)
-        case Some(idx) => idx.filter(col("batch_id") =!= batchId).drop("batch_id")
-      }
-    val all = existing.unionByName(fresh).cache()
-    val newBands = Audio.bandRows(fresh)
-      .select(col("band"), col("band_val"), col("doc_id").as("id_new"))
-    val allBands = MinHash.capBuckets(Audio.bandRows(all),
-        SimHash.BandBucketCap)
-      .select(col("band"), col("band_val"), col("doc_id").as("id_other"))
-    val cand = newBands.join(allBands, Seq("band", "band_val"))
-      .filter(col("id_new") =!= col("id_other"))
-      .select(least(col("id_new"), col("id_other")).as("id_a"),
-        greatest(col("id_new"), col("id_other")).as("id_b"))
-      .distinct()
-    val verified = cand
-      .join(all.select(col("doc_id").as("id_a"), col("fp").as("h_a")), "id_a")
-      .join(all.select(col("doc_id").as("id_b"), col("fp").as("h_b")), "id_b")
-      .withColumn("hamming", expr("bit_count(h_a ^ h_b)"))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    graft.sources.Sinks.dynamicOverwrite(
-      verified.withColumn("batch_id", lit(batchId)),
-      s"$stateDir/pairs", Seq("batch_id"))
-    graft.sources.Sinks.dynamicOverwrite(
-      fresh.withColumn("batch_id", lit(batchId)), indexDir, Seq("batch_id"))
-    all.unpersist(); decoded.unpersist()
-    ()
+        .as[graft.multimodal.Binary.MediaPayload]), "fp", col("clip.fp"), maxHamming, batchId)
   }
 
   /** Accumulated near-dup audio pairs from the [[audioDedupSink]] log. */
   def readAudioPairs(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/pairs").drop("batch_id")
+    BatchLog(s"$stateDir/pairs").read(spark)
 
   // --------------------------------------------------------------------
   // s25: streaming robots gate (r15) — i18 at intake.
@@ -2247,15 +1914,13 @@ object Streams {
       throw new IllegalArgumentException(
         s"no deployed robots table at $stateDir/robots — run prepareRobots first")
     val robots = spark.read.parquet(s"$stateDir/robots")
-    graft.sources.Sinks.dynamicOverwrite(
-      graft.sources.Robots.verdicts(spark, batch, urlCol, robots, agent)
-        .withColumn("batch_id", lit(batchId)),
-      s"$stateDir/verdicts", Seq("batch_id"))
+    BatchLog(s"$stateDir/verdicts").write(
+      graft.sources.Robots.verdicts(spark, batch, urlCol, robots, agent), batchId)
   }
 
   /** Accumulated verdicts from the [[robotsGateSink]] log. */
   def readRobotsVerdicts(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/verdicts").drop("batch_id")
+    BatchLog(s"$stateDir/verdicts").read(spark)
 
   /** Retrain the deployed merge table from the ACCUMULATED word counts and
     * swap it atomically — the caller policy [[tokenizerDriftSink]]'s drift
@@ -2270,7 +1935,7 @@ object Streams {
       maxWords: Int = 1 << 16): Seq[String] = {
     import spark.implicits._
     import graft.text.Bpe
-    val wc = spark.read.parquet(s"$stateDir/words")
+    val wc = BatchLog(s"$stateDir/words").read(spark)
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWords)
       .as[(String, Long)].collect().toSeq
@@ -2336,45 +2001,22 @@ object Streams {
   def unigramDriftSink(spark: SparkSession, stateDir: String,
       textCol: String = "text", vocabSize: Int = 192,
       maxWords: Int = 1 << 14)(batch: DataFrame, batchId: Long): Unit = {
-    import spark.implicits._
-    import graft.text.{TextFunctions, Unigram}
-    // the s22 empty-batch discipline: no empty-table deploy, no null
-    // drift rows
-    if (batch.isEmpty) return
-    val words = batch
-      .select(explode(TextFunctions.tokens(col(textCol))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .cache()
-    if (words.isEmpty) { words.unpersist(); return }
-    graft.sources.Sinks.dynamicOverwrite(
-      words.withColumn("batch_id", lit(batchId)), s"$stateDir/words", Seq("batch_id"))
-    val hasPrior = graft.sources.Sources
-      .parquetIfExists(spark, s"$stateDir/words")
-      .exists(!_.filter(col("batch_id") =!= batchId).isEmpty)
-    val vocab: Seq[Unigram.Piece] =
-      if (!hasPrior) {
-        val wc = words.orderBy(col("c").desc, col("w")).limit(maxWords)
-          .as[(String, Long)].collect().toSeq
-        val v = Unigram.trainOnCounts(wc, vocabSize)
-        writeUnigramVocab(spark, stateDir, v)
-        v
-      } else readUnigramVocab(spark, stateDir)
-    val known = typedLit(vocab.map(_.piece))
-    val drift = words
-      .select(col("c"),
-        Unigram.encode(col("w"), vocab).as("ps"))
-      .select(col("c"), size(col("ps")).as("t"),
-        when(forall(col("ps"), p => array_contains(known, p)), 0L)
-          .otherwise(1L).as("unk"))
-      .agg(
-        sum(col("c")).as("n_word_occurrences"),
-        count(lit(1)).as("n_distinct_words"),
-        (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
-        (sum(col("c") * col("unk")).cast("double") / sum(col("c"))).as("unk_rate"))
-      .withColumn("batch_id", lit(batchId))
-    graft.sources.Sinks.dynamicOverwrite(drift, s"$stateDir/drift", Seq("batch_id"))
-    words.unpersist()
-    ()
+    import graft.text.Unigram
+    driftBatch[Seq[Unigram.Piece]](spark, stateDir, textCol, maxWords, batch, batchId)(
+      Unigram.trainOnCounts(_, vocabSize), writeUnigramVocab(spark, stateDir, _),
+      readUnigramVocab(spark, stateDir), Nil) { (words, vocab) =>
+      val known = typedLit(vocab.map(_.piece))
+      words
+        .select(col("c"), Unigram.encode(col("w"), vocab).as("ps"))
+        .select(col("c"), size(col("ps")).as("t"),
+          when(forall(col("ps"), p => array_contains(known, p)), 0L)
+            .otherwise(1L).as("unk"))
+        .agg(
+          sum(col("c")).as("n_word_occurrences"),
+          count(lit(1)).as("n_distinct_words"),
+          (sum(col("c") * col("t")).cast("double") / sum(col("c"))).as("fertility"),
+          (sum(col("c") * col("unk")).cast("double") / sum(col("c"))).as("unk_rate"))
+    }
   }
 
   /** Re-learn the piece table from the ACCUMULATED word counts and swap
@@ -2385,7 +2027,7 @@ object Streams {
       vocabSize: Int = 192,
       maxWords: Int = 1 << 14): Seq[graft.text.Unigram.Piece] = {
     import spark.implicits._
-    val wc = spark.read.parquet(s"$stateDir/words")
+    val wc = BatchLog(s"$stateDir/words").read(spark)
       .groupBy(col("w")).agg(sum(col("c")).as("c"))
       .orderBy(col("c").desc, col("w")).limit(maxWords)
       .as[(String, Long)].collect().toSeq

@@ -377,6 +377,26 @@ class ExtOpsSpec extends SparkSpec {
     assert(gotBig.take(3) == Seq((0L, 1L), (0L, 2L), (0L, 3L)))
     assert(gotBig.last == ((254L, 255L)))
     assert(gotBig == gotBig.sorted, "pairs must be i-major ordered")
+    // 65,537 elements: C(n,2) = 2,147,516,416 pairs, past what an array can
+    // hold — a named error, generated and interpreted. The input is built
+    // per row (not foldable), so the projection really runs in each mode.
+    val huge = spark.range(1).select(sequence(col("id"), col("id") + 65536L).as("xs"))
+      .select(call_function("graft_pairs", col("xs")).as("p"))
+      .select(size(col("p")))
+    for ((wholeStage, factory) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factory)
+      try {
+        val e = intercept[Exception](huge.collect())
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains("graft_pairs: an array of 65537 elements")),
+          s"[$factory] unnamed failure: ${msgs.mkString(" / ")}")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("GapFill.dense densifies, zero-fills, LOCFs — and names the key on an over-span row") {

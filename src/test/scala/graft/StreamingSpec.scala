@@ -2076,4 +2076,193 @@ class StreamingSpec extends SparkSpec {
       .option("path", t).load()
     assert(ok.isStreaming)
   }
+
+  // ------------------------------------------------------------------
+  // BatchLog pins, table-driven over every sink that writes batch logs:
+  // (1) replaying the latest batch with an EMPTY recomputation leaves the
+  // state exactly as if that batch had been empty all along (no stale
+  // partition survives), and the read face stays readable; (2) an empty
+  // FIRST batch leaves no file-less (unreadable) log directory behind.
+  // tokenShardSink is not in the table: its artifact is a directory of
+  // shard files, not a batch log, and it skips an empty batch whole.
+  // ------------------------------------------------------------------
+
+  private type DF = org.apache.spark.sql.DataFrame
+
+  /** One batch-log sink: its foreachBatch function over a state dir, a
+    * non-empty batch (`.limit(0)` of it is the empty one), its read face,
+    * and any one-time deployment into the state dir. */
+  private case class LogSink(name: String, sink: String => (DF, Long) => Unit,
+      batch: () => DF, read: String => DF, deploy: String => Unit = _ => ())
+
+  private lazy val logSinks: Seq[LogSink] = {
+    import graft.streaming.BatchLog
+    val texts = Seq(
+      (1L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+        "kilo lima mike november oscar papa quebec romeo sierra tango"),
+      (2L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
+        "kilo lima mike november oscar papa quebec romeo sierra uniform"),
+      (3L, "one two three four five six seven eight nine tail words here"),
+      (4L, "amber basalt copper dune ember flint gneiss harbor iron jasper " +
+        "karst lagoon marble nickel onyx pumice quartz ridge slate topaz"))
+    def docs() = texts.toDF("doc_id", "text")
+    val evalDocs = Seq((0L, "one two three four five six seven eight nine")).toDF("doc_id", "text")
+    def page(id: Long, base: String, hrefs: Seq[String]) =
+      (id, "<html><body><p>" + "enough prose for a main text paragraph here " * 3 +
+        "</p>" + hrefs.map(h => s"""<a href="$h">x</a>""").mkString(" ") + "</body></html>",
+        base)
+    def pages() = Seq(
+      page(1L, "https://site1.example/a", Seq("https://hub.example/x", "https://site2.example/y")),
+      page(2L, "https://site2.example/b", Seq("https://hub.example/x")))
+      .toDF("doc_id", "html", "base_url")
+    def wav(s: Array[Int]) = graft.multimodal.Audio.encodePcm16Wav(8000, s)
+    val clip = Array.tabulate(600)(k => ((k * 53 % 171) - 80) * 200)
+    val other = Array.tabulate(600)(k => ((k * 89 % 137) - 50) * 200)
+    lazy val warcFile = {
+      def rec(headers: Seq[(String, String)], body: String): String =
+        "WARC/1.0\r\n" + headers.map { case (k, v) => s"$k: $v\r\n" }.mkString +
+          s"Content-Length: ${body.getBytes("UTF-8").length}\r\n\r\n" + body + "\r\n\r\n"
+      val f = Files.createTempFile("batchlog", ".warc")
+      Files.write(f, (rec(Seq("WARC-Type" -> "response", "WARC-Target-URI" -> "https://a.example/p",
+          "WARC-Date" -> "2024-01-01T00:00:00Z", "Content-Type" -> "text/plain"), "page") +
+        rec(Seq("WARC-Type" -> "revisit", "WARC-Target-URI" -> "https://a.example/p",
+          "WARC-Date" -> "2024-01-01T00:00:00Z", "WARC-Payload-Digest" -> "sha1:D1",
+          "WARC-Refers-To-Target-URI" -> "https://a.example/p",
+          "Content-Type" -> "message/http"), "")).getBytes("UTF-8"))
+      f.toString
+    }
+    def warc() = graft.sources.Warc.read(spark, warcFile)._1
+    def vecs() = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.999, 0.01)), (3L, Seq(0.0, 1.0)),
+      (4L, Seq(10.0, 10.0))).toDF("id", "vec")
+    val B = graft.multimodal.Binary
+    Seq(
+      LogSink("nearDupSink", st => Streams.nearDupSink(spark, s"$st/index", s"$st/pairs"),
+        docs, st => BatchLog(s"$st/pairs").read(spark)),
+      LogSink("curateSink", st => Streams.curateSink(spark, st), docs,
+        Streams.readCurated(spark, _)),
+      LogSink("containmentSink", st => Streams.containmentSink(spark, st), docs,
+        Streams.readContainmentKept(spark, _)),
+      LogSink("semDedupSink", st => Streams.semDedupSink(spark, st), vecs,
+        Streams.readSemDedupKept(spark, _)),
+      LogSink("decontaminateSink", st => Streams.decontaminateSink(spark, st,
+        Streams.evalGramSet(evalDocs, "text")), docs, Streams.readDecontaminated(spark, _)),
+      LogSink("bloomDecontaminateSink", st => Streams.bloomDecontaminateSink(spark, st), docs,
+        Streams.readDecontaminated(spark, _),
+        st => Streams.prepareBloomDecontamination(spark, st, evalDocs)),
+      LogSink("htmlExtractSink", st => Streams.htmlExtractSink(spark, st),
+        () => pages().select("doc_id", "html"), Streams.readExtracted(spark, _)),
+      LogSink("mixtureSink", st => Streams.mixtureSink(spark, st),
+        () => docs().withColumn("lang", when(col("doc_id") % 2 === 0, "en").otherwise("de")),
+        Streams.readMixtureKept(spark, _)),
+      LogSink("qualityCutoffSink", st => Streams.qualityCutoffSink(spark, st),
+        () => docs().withColumn("source", lit("web")), Streams.readQualityKept(spark, _)),
+      LogSink("lineDedupSink", st => Streams.lineDedupSink(spark, st),
+        () => Seq((1L, "alpha\nbeta\ngamma"), (2L, "beta\ndelta")).toDF("doc_id", "text"),
+        Streams.readLineDedup(spark, _)),
+      LogSink("spanDedupSink", st => Streams.spanDedupSink(spark, st, n = 4), docs,
+        Streams.readSpans(spark, _)),
+      LogSink("noveltySink", st => Streams.noveltySink(spark, st, n = 4), docs,
+        Streams.readNovelty(spark, _)),
+      LogSink("shardPackSink", st => Streams.shardPackSink(spark, st, budget = 10),
+        () => Seq((0L, 3L), (1L, 17L), (4L, 7L)).toDF("doc_id", "n_tokens"),
+        Streams.readShardPack(spark, _)),
+      LogSink("sequencePackSink", st => Streams.sequencePackSink(spark, st, seqLen = 10),
+        () => Seq((0L, 3L), (1L, 17L), (4L, 7L)).toDF("doc_id", "n_tokens"),
+        Streams.readSequencePack(spark, _)),
+      LogSink("revisitLogSink", st => Streams.revisitLogSink(spark, st), warc,
+        Streams.readRevisitGated(spark, _)),
+      LogSink("imageGateSink", st => Streams.imageGateSink(spark, st),
+        () => B.toPpmPayloads(spark, Seq((1L, "m" * 384), (2L, "x" * 96))
+          .toDF("doc_id", "text")).toDF(), Streams.readImageGate(spark, _)),
+      LogSink("ivfIndexSink", st => Streams.ivfIndexSink(spark, s"$st/index", s"$st/stats", k = 2),
+        vecs, st => BatchLog(s"$st/index").read(spark)),
+      LogSink("goldAggSink", st => Streams.goldAggSink(spark, st, Seq("event_type"), "value"),
+        () => Seq(("click", 1.25), ("view", 2.50)).toDF("event_type", "value"),
+        Streams.readGoldAgg(spark, _, Seq("event_type"))),
+      LogSink("linkGraphSink", st => Streams.linkGraphSink(spark, st), pages,
+        Streams.readLinkGraph(spark, _)),
+      LogSink("frontierSink", st => Streams.frontierSink(spark, st), pages,
+        Streams.readFrontier(spark, _, 10)),
+      LogSink("sitemapSink", st => Streams.sitemapSink(spark, st),
+        () => Seq(("s1", "<?xml version=\"1.0\"?><urlset><url><loc>https://declared.example/a" +
+          "</loc></url></urlset>")).toDF("doc_id", "xml"),
+        st => BatchLog(s"$st/sitemap").read(spark)),
+      LogSink("pcaScatterSink", st => Streams.pcaScatterSink(spark, st, "vec"), vecs,
+        Streams.readPcaModel(spark, _, 1).components.toSeq.map(_.toSeq).toDF("axis")),
+      LogSink("tokenizerDriftSink", st => Streams.tokenizerDriftSink(spark, st), docs,
+        Streams.readTokenizerDrift(spark, _)),
+      LogSink("classifierScoreSink", st => Streams.classifierScoreSink(spark, st), docs,
+        Streams.readClassifierScores(spark, _),
+        st => Streams.prepareClassifier(spark, st, Array.fill(64)(0.5))),
+      LogSink("imageDedupSink", st => Streams.imageDedupSink(spark, st),
+        () => B.toPngPayloads(spark, docs().filter(col("doc_id") =!= 2L)
+          .union(docs().filter(col("doc_id") === 1L).withColumn("doc_id", lit(2L))))
+          .toDF().select("doc_id", "payload"),
+        Streams.readImagePairs(spark, _)),
+      LogSink("audioDedupSink", st => Streams.audioDedupSink(spark, st),
+        () => Seq((1L, wav(clip)), (2L, wav(clip)), (3L, wav(other))).toDF("doc_id", "payload"),
+        Streams.readAudioPairs(spark, _)),
+      LogSink("robotsGateSink", st => Streams.robotsGateSink(spark, st, "graftbot"),
+        () => Seq((1L, "http://a.com/private/x"), (2L, "http://a.com/ok")).toDF("doc_id", "url"),
+        Streams.readRobotsVerdicts(spark, _),
+        st => Streams.prepareRobots(spark, st,
+          Seq(("a.com", "User-agent: *\nDisallow: /private/")).toDF("domain", "robots_txt"))),
+      LogSink("unigramDriftSink", st => Streams.unigramDriftSink(spark, st, vocabSize = 48), docs,
+        Streams.readUnigramDrift(spark, _)))
+  }
+
+  /** Every log directory under `state`, as its rows rendered to strings
+    * (a file-less directory reads as EMPTY, an unparseable one as
+    * UNREADABLE). */
+  private def logSnapshot(state: String): Map[String, Seq[String]] =
+    Option(new java.io.File(state).listFiles()).toSeq.flatten.filter(_.isDirectory).map { d =>
+      val hasData = Files.walk(d.toPath).anyMatch(p =>
+        Files.isRegularFile(p) && !p.getFileName.toString.matches("^[._].*"))
+      d.getName -> (if (!hasData) Seq("EMPTY") else
+        try {
+          val df = spark.read.parquet(d.getPath)
+          df.select(df.columns.sorted.map(c => col(c).cast("string")): _*)
+            .collect().map(_.toString).sorted.toSeq
+        } catch { case e: org.apache.spark.sql.AnalysisException =>
+          Seq(s"UNREADABLE ${e.getCondition}") })
+    }.toMap
+
+  private def freshState(s: LogSink, tag: String): String = {
+    val st = Files.createTempDirectory(s"batchlog_${s.name}_$tag").toFile.getAbsolutePath + "/state"
+    s.deploy(st)
+    st
+  }
+
+  test("BatchLog: an empty replay of the latest batch leaves no stale partition " +
+      "in any sink's logs, and the read face stays readable") {
+    val failures = logSinks.flatMap { s =>
+      val replayed = freshState(s, "replayed")
+      val sink = s.sink(replayed)
+      sink(s.batch(), 0L)
+      sink(s.batch(), 1L)
+      sink(s.batch().limit(0), 1L) // the replay recomputes NOTHING
+      val reference = freshState(s, "reference")
+      s.sink(reference)(s.batch(), 0L)
+      s.sink(reference)(s.batch().limit(0), 1L)
+      val got = logSnapshot(replayed)
+      val want = logSnapshot(reference)
+      val readable = scala.util.Try(s.read(replayed).collect()).isSuccess
+      if (got == want && readable) None
+      else Some(s"${s.name}: readable=$readable, replayed ${got.keys.toSeq.sorted
+        .filter(k => got.get(k) != want.get(k)).map(k => k -> got(k))} vs reference " +
+        want.keys.toSeq.sorted.filter(k => got.get(k) != want.get(k)).map(k => k -> want(k)))
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("BatchLog: an empty first batch leaves every sink's logs absent, not unreadable") {
+    val failures = logSinks.flatMap { s =>
+      val st = freshState(s, "empty_first")
+      s.sink(st)(s.batch().limit(0), 0L)
+      val bad = logSnapshot(st).filter { case (_, rows) =>
+        rows.exists(r => r == "EMPTY" || r.startsWith("UNREADABLE")) }
+      if (bad.isEmpty) None else Some(s"${s.name}: ${bad.keys.toSeq.sorted.mkString(", ")}")
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }
